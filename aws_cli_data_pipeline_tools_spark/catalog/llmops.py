@@ -1291,8 +1291,8 @@ def _duck_kmeans_iter(i: int) -> str:
     """One unrolled Lloyd step of the DuckDB k-means twin: decimal-exact
     dots vs c{i-1}, argmax assignment (ties → smallest list_id), per-dim
     decimal-mean update with empty clusters keeping their previous
-    centroid, then normalization — mirrors kmeans_clusters_portable's
-    loop body expression for expression."""
+    centroid, then normalization — mirrors the similarity trainer's
+    (_portable_centroid_literals) loop body expression for expression."""
     p = i - 1
     return f"""d{i} AS (
   SELECT xe.id, c{p}.list_id,
@@ -1318,7 +1318,7 @@ def _duck_kmeans_prefix(
     n_centroids: int, refine_iters: int, corpus_cte: str | None = None
 ) -> str:
     """Shared WITH-body prefix of every kmeans-twin oracle (profile +
-    portable IVF): src → exploded xe → md5-parity seeds → seeded frame
+    IVF): src → exploded xe → md5-parity seeds → seeded frame
     r0 → normalized c0 → unrolled Lloyd iterations through c{last}.
     Single-sourced so the trainer replay can never drift between the
     entries that consume it (r13: ann_ivf_topk graduation reuses the
@@ -1327,14 +1327,20 @@ def _duck_kmeans_prefix(
     ``corpus_cte`` swaps the raw embeddings table for a derived corpus
     (the ``_duck_lsh_topk_sql`` pattern — r13: the planted-cluster
     corpus ``duck_clustered_cte`` for the ann_ivf_topk_clustered
-    graduation)."""
+    graduation).
+
+    ``src`` keeps only vectors with every component a finite number —
+    the engine's ``similarity._vectors`` filter, so NULL/NaN/±Inf
+    vectors are dropped by both engines alike."""
     iters = ", ".join(
         _duck_kmeans_iter(i) for i in range(1, refine_iters + 1)
     )
     corpus_head = f"corpus AS ({corpus_cte}), " if corpus_cte else ""
     src_table = "corpus" if corpus_cte else "embeddings"
     return f"""{corpus_head}src AS (
-  SELECT vec_id, embedding FROM {src_table} WHERE embedding IS NOT NULL
+  SELECT vec_id, embedding FROM {src_table}
+  WHERE embedding IS NOT NULL
+    AND len(list_filter(embedding, v -> v IS NULL OR isnan(v) OR isinf(v))) = 0
 ), xe AS (
   SELECT vec_id AS id,
          unnest(generate_series(1, len(embedding))) - 1 AS pos,
@@ -1354,7 +1360,7 @@ def _duck_kmeans_prefix(
 
 
 def _duck_kmeans_profile_sql(n_centroids: int, refine_iters: int) -> str:
-    """Full DuckDB twin of kmeans_clusters_portable + the per-cluster
+    """Full DuckDB twin of similarity.kmeans_clusters + the per-cluster
     profile aggregate (VERDICT r11 task 4a): unrolled Lloyd iterations
     exactly as embedding_pca_power_iteration / pagerank_fixed_point
     unroll theirs."""
@@ -1394,19 +1400,17 @@ FROM cosr GROUP BY list_id ORDER BY list_id
     oracle=_duck_kmeans_profile_sql(16, 2),
     tags=("llmops", "similarity", "clustering"),
     notes="Deterministic spherical k-means profile, now FULLY oracle-"
-    "checked (VERDICT r11 task 4a): kmeans_clusters_portable seeds from "
+    "checked (VERDICT r11 task 4a): kmeans_clusters seeds from "
     "the md5-parity (portable_hash64) order, runs 2 Lloyd iterations with "
     "every inner product / mean / norm a DECIMAL(38,10) sum, and the "
     "DuckDB twin unrolls the identical iterations (the pca_power_iteration "
     "discipline) — labels, sizes, and mean cosines hash-match exactly. "
     "Labels drive diversity sampling/quotas; the same labels are IVF index "
-    "lists. The numpy-path kmeans_clusters remains the throughput variant.",
+    "lists (build_ivf_index trains and labels with the same trainer).",
 )
 def embedding_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, "embeddings", sf_dir)
-    labeled = similarity.kmeans_clusters_portable(
-        emb, n_centroids=16, refine_iters=2
-    )
+    labeled = similarity.kmeans_clusters(emb, n_centroids=16, refine_iters=2)
     prof = (
         labeled.groupBy("list_id")
         .agg(
@@ -1421,39 +1425,22 @@ def embedding_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("list_id")
     )
-    # The profile is ≤16 rows by construction; materialize it here so the
-    # corpus-sized exploded cache inside kmeans_clusters_portable can be
-    # released deterministically (ADVICE r12) instead of lingering until
-    # the ContextCleaner notices the plan is gone. Rebuilding from the
-    # collected rows keeps the returned frame free of any reference to
-    # the cached lineage; the compare is row-order-insensitive.
+    # The profile is ≤16 rows by construction; it is collected here and
+    # rebuilt as a sorted local relation, so the returned frame carries
+    # no reference to the corpus lineage; the compare is
+    # row-order-insensitive.
     rows = prof.collect()
-    labeled.release_cache()
     return _localized_sorted(spark, rows, prof.schema, "list_id")
 
 
-def _duck_ivf_topk_sql(
-    n_centroids: int,
-    refine_iters: int,
-    n_probe: int,
-    k: int,
-    corpus_cte: str | None = None,
-) -> str:
-    """Full DuckDB twin of ivf_topk(portable=True) (VERDICT r12 task 2b):
-    the shared Lloyd unroll (_duck_kmeans_prefix — the trainer replay
-    that made embedding_cluster_profile exact) yields c{last}; then one
-    dot frame serves BOTH the corpus labels (rn = 1) and the query
-    probes (rn <= n_probe over the query subset — queries are corpus
-    rows vec_id < 5), the candidate set is the probe×label equi-join on
-    list_id, and the rerank replays the established exact-cosine
-    discipline. Every step deterministic → full top-k hash-match.
-    The rerank joins ``src`` (the prefix's non-null corpus CTE), so a
-    ``corpus_cte`` override (r13: ann_ivf_topk_clustered) reranks over
-    the same derived corpus the trainer saw."""
+def _duck_ivf_labels(refine_iters: int) -> str:
+    """``ldot`` (every corpus vector's decimal-exact dot against every
+    final centroid) and ``lab`` (its argmax list, ties → smallest
+    list_id) CTEs over a ``_duck_kmeans_prefix`` — the DuckDB twin of the
+    corpus labels ``similarity.ivf_topk`` joins on and
+    ``similarity.build_ivf_index`` writes as ``list_id``."""
     last = refine_iters
-    return f"""
-WITH {_duck_kmeans_prefix(n_centroids, refine_iters, corpus_cte)},
-ldot AS (
+    return f"""ldot AS (
   SELECT xe.id, c{last}.list_id,
          CAST(sum(CAST(xe.x * c{last}.c AS DECIMAL(38,10))) AS DOUBLE) AS dot
   FROM xe JOIN c{last} ON c{last}.pos = xe.pos GROUP BY xe.id, c{last}.list_id
@@ -1463,7 +1450,30 @@ ldot AS (
            row_number() OVER (PARTITION BY id ORDER BY dot DESC, list_id) AS rn
     FROM ldot
   ) WHERE rn = 1
-), probes AS (
+)"""
+
+
+def _duck_ivf_topk_sql(
+    n_centroids: int,
+    refine_iters: int,
+    n_probe: int,
+    k: int,
+    corpus_cte: str | None = None,
+) -> str:
+    """Full DuckDB twin of similarity.ivf_topk (VERDICT r12 task 2b):
+    the shared Lloyd unroll (_duck_kmeans_prefix — the trainer replay
+    that made embedding_cluster_profile exact) yields c{last}; then one
+    dot frame serves BOTH the corpus labels (rn = 1) and the query
+    probes (rn <= n_probe over the query subset — queries are corpus
+    rows vec_id < 5), the candidate set is the probe×label equi-join on
+    list_id, and the rerank replays the established exact-cosine
+    discipline. Every step deterministic → full top-k hash-match.
+    The rerank joins ``src`` (the prefix's filtered corpus CTE), so a
+    ``corpus_cte`` override (r13: ann_ivf_topk_clustered) reranks over
+    the same derived corpus the trainer saw."""
+    return f"""
+WITH {_duck_kmeans_prefix(n_centroids, refine_iters, corpus_cte)},
+{_duck_ivf_labels(refine_iters)}, probes AS (
   SELECT id AS query_id, list_id FROM (
     SELECT id, list_id,
            row_number() OVER (PARTITION BY id ORDER BY dot DESC, list_id) AS rn
@@ -1496,14 +1506,15 @@ ORDER BY query_id, rank
     "join on list_id, exact rerank. At scale the labeled corpus persists "
     "partitionBy(list_id) so probes become partition-pruned scans. "
     "Graduated to a FULL DuckDB oracle (r13, VERDICT r12 task 2b): "
-    "portable=True trains with md5-parity seeding + decimal-exact Lloyd "
+    "ivf_topk trains with md5-parity seeding + decimal-exact Lloyd "
     "steps whose centroids round-trip the driver as literals "
     "(_portable_centroid_literals — one scan + a k·dim-group aggregate "
     "per iteration, the corpus never shuffles), and the DuckDB twin "
     "unrolls the identical iterations, so lists, probes, candidates, "
     "and the full top-k hash-match. Recall at this operating point "
-    "keeps its pytest floor vs brute-force cosine; the numpy trainer "
-    "remains the throughput default (portable=False).",
+    "keeps its pytest floor vs brute-force cosine. The same trainer "
+    "builds the persisted index (build_ivf_index), so one trainer serves "
+    "every IVF and k-means caller.",
 )
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, "embeddings", sf_dir)
@@ -1513,7 +1524,6 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.ivf_topk(
         emb, queries, k=10, n_centroids=16, n_probe=8,
         query_id_col="query_id",
-        portable=True,  # decimal-exact trainer — the DuckDB oracle's twin
     )
 
 
@@ -1529,7 +1539,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "clusters. At warehouse scale the labeled corpus persists "
     "partitionBy(list_id) (build_ivf_index) so this probe is a "
     "partition-pruned scan of 1/16 of the data. Graduated to a FULL "
-    "DuckDB oracle (r13, extending VERDICT r12 task 2b): portable=True "
+    "DuckDB oracle (r13, extending VERDICT r12 task 2b): the "
     "decimal-exact Lloyd trainer over the md5-replayed corpus "
     "(_duck_kmeans_prefix(corpus_cte=duck_clustered_cte)) — lists, "
     "probes, candidates, and the full top-k hash-match. Retrieval "
@@ -1537,7 +1547,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(test_ivf_clustered_portable_recall) vs brute-force cosine.",
 )
 def ann_ivf_topk_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # persist/collect/release: see ann_lsh_topk_clustered — the portable
+    # persist/collect/release: see ann_lsh_topk_clustered — the
     # trainer scans the corpus several times (seeding + 2 Lloyd
     # iterations + labels + rerank) and the md5 corpus expression is the
     # dominant per-scan cost when re-evaluated (r13 measurement).
@@ -1548,7 +1558,6 @@ def ann_ivf_topk_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = similarity.ivf_topk(
         emb, queries, k=10, n_centroids=16, n_probe=1,
         query_id_col="query_id",
-        portable=True,  # decimal-exact trainer — the DuckDB oracle's twin
     )
     rows = out.collect()
     emb.unpersist()

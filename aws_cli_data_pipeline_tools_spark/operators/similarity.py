@@ -125,12 +125,7 @@ def cosine_topk(
         )
     )
     c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-    scored = q.crossJoin(c).select(
-        "query_id",
-        "neighbor_id",
-        F.round(cosine_similarity(F.col("qv"), F.col("cv")), 6).alias("cosine"),
-    )
-    return _rank_topk(_partition_topk(scored, k), k)
+    return _cosine_rerank(q.crossJoin(c), k)
 
 
 def _hyperplane_tables(
@@ -267,151 +262,6 @@ def _bucketize(
     )
 
 
-def _ivf_centroids(
-    corpus: DataFrame,
-    id_name: str,
-    vec_name: str,
-    n_centroids: int,
-    refine_iters: int,
-    seed: int,
-):
-    """Train IVF centroids: deterministic seeding + distributed Lloyd steps.
-
-    Seeding: the ``n_centroids`` corpus vectors with the smallest
-    ``xxhash64(id, seed)`` — a uniform, reproducible sample that needs one
-    ``TakeOrderedAndProject`` job and collects only the centroids (the
-    model is O(centroids·dim) floats — legitimately driver-sized, like the
-    LSH hyperplanes).
-
-    Each Lloyd iteration is map-side: every Arrow batch computes, per
-    centroid, the (count, sum-vector) of its assigned rows — so the shuffle
-    is ``partitions × centroids`` tiny partial rows, never the corpus — and
-    the per-centroid partials are merged with one small grouped-map. Empty
-    clusters keep their previous centroid.
-
-    Returns a (n_centroids, dim) float64 numpy array with L2-normalized
-    rows (cosine assignment ≡ dot product with normalized centroids).
-    """
-    import numpy as np
-    import pandas as pd
-
-    # same NULL-vector drop contract as _bucketize/_ivf_assign: a NULL
-    # embedding in any Arrow batch crashed the Lloyd partials' np.stack
-    # (r10 review); it carries no geometry to train on
-    corpus = corpus.filter(F.col(vec_name).isNotNull())
-    seeds = (
-        corpus.select(vec_name)
-        .orderBy(F.xxhash64(F.col(id_name), F.lit(seed)))
-        .limit(n_centroids)
-        .collect()
-    )
-    if not seeds:
-        # explicit contract error, matching lsh_ann_topk's empty-corpus
-        # guard — np.stack([]) would otherwise raise an opaque "need at
-        # least one array to stack" (r9 review)
-        raise ValueError("corpus is empty: cannot seed k-means centroids")
-    cents = np.stack([np.asarray(r[0], dtype=np.float64) for r in seeds])
-
-    def normalize(m):
-        n = np.linalg.norm(m, axis=1, keepdims=True)
-        n[n == 0.0] = 1.0
-        return m / n
-
-    cents = normalize(cents)
-    partial_schema = "list_id int, cnt bigint, vsum array<double>"
-
-    for _ in range(refine_iters):
-        cn = cents  # bind current iteration's centroids into the closure
-
-        def partials(batches):
-            for batch in batches:
-                if batch.empty:
-                    continue
-                mat = np.stack(batch[vec_name].to_numpy()).astype(np.float64)
-                assign = np.argmax(normalize(mat) @ cn.T, axis=1)
-                rows = []
-                for lid in np.unique(assign):
-                    sub = mat[assign == lid]
-                    rows.append((int(lid), len(sub), sub.sum(axis=0).tolist()))
-                yield pd.DataFrame(rows, columns=["list_id", "cnt", "vsum"])
-
-        def merge(pdf):
-            vs = np.stack(pdf["vsum"].to_numpy()).sum(axis=0)
-            return pd.DataFrame(
-                {
-                    "list_id": [int(pdf["list_id"].iloc[0])],
-                    "cnt": [int(pdf["cnt"].sum())],
-                    "vsum": [vs.tolist()],
-                }
-            )
-
-        merged = (
-            corpus.select(vec_name)
-            .mapInPandas(partials, schema=partial_schema)
-            .groupBy("list_id")
-            .applyInPandas(merge, schema=partial_schema)
-            .collect()
-        )
-        nxt = cents.copy()  # empty clusters keep their previous centroid
-        for r in merged:
-            if r["cnt"] > 0:
-                nxt[r["list_id"]] = np.asarray(r["vsum"]) / r["cnt"]
-        cents = normalize(nxt)
-    return cents
-
-
-def _ivf_assign(
-    df: DataFrame, id_name: str, vec_name: str, cents, n_probe: int = 1
-) -> DataFrame:
-    """(id, vec) → (id, vec, list_id) × n_probe nearest centroids.
-
-    Narrow mapInPandas (no shuffle): one numpy matmul per Arrow batch
-    against the broadcast-by-closure centroid matrix. n_probe=1 labels a
-    corpus; n_probe>1 expands queries to their probe lists.
-    """
-    import numpy as np
-    import pandas as pd
-
-    id_t = df.schema[id_name].dataType.simpleString()
-    vec_t = df.schema[vec_name].dataType.simpleString()
-    # NULL vectors: same drop contract as _bucketize (np.stack would
-    # turn ragged and crash the task — r10 review)
-    df = df.filter(F.col(vec_name).isNotNull())
-
-    def gen(batches):
-        for batch in batches:
-            if batch.empty:
-                continue
-            mat = np.stack(batch[vec_name].to_numpy()).astype(np.float64)
-            nrm = np.linalg.norm(mat, axis=1, keepdims=True)
-            nrm[nrm == 0.0] = 1.0
-            sims = (mat / nrm) @ cents.T  # (n, C)
-            if n_probe == 1:
-                yield pd.DataFrame(
-                    {
-                        id_name: batch[id_name],
-                        vec_name: batch[vec_name],
-                        "list_id": np.argmax(sims, axis=1).astype(np.int32),
-                    }
-                )
-            else:
-                top = np.argsort(-sims, axis=1)[:, :n_probe]  # (n, probe)
-                yield pd.concat(
-                    pd.DataFrame(
-                        {
-                            id_name: batch[id_name],
-                            vec_name: batch[vec_name],
-                            "list_id": top[:, j].astype(np.int32),
-                        }
-                    )
-                    for j in range(top.shape[1])
-                )
-
-    return df.mapInPandas(
-        gen, schema=f"{id_name} {id_t}, {vec_name} {vec_t}, list_id int"
-    )
-
-
 def _double_array_sql(cvec: list[float]) -> str:
     """Spark SQL source of an ``array<double>`` literal. ``repr`` is the
     shortest round-trip decimal form, so ``Double.parseDouble`` restores
@@ -434,60 +284,56 @@ def _double_array_sql(cvec: list[float]) -> str:
     return "array(" + ",".join(one(v) for v in cvec) + ")"
 
 
-def _centroid_literal_array(cvec: list[float]):
-    # Built via ONE SQL parse, not dim py4j lit() calls: classic
-    # PySpark's F.lit(list) expands to F.array(*[F.lit(x) ...]) — one
-    # py4j round-trip per element, measured at ~1.2 s per k×dim matrix
-    # build (r13 optimization round). The parsed CreateArray(literals)
-    # constant-folds to a single Literal node.
-    return F.expr(_double_array_sql(cvec))
-
-
-def _portable_dot_literal(vec, cvec: list[float]):
-    """Decimal-exact dot of a vector column against a collected centroid
-    (engine-portable, VERDICT r12 task 2b): each product is computed in
-    DOUBLE then cast to DECIMAL(38,10) — exactly the addend the DuckDB
-    twin's ``sum(CAST(x * c AS DECIMAL(38,10)))`` sums — and decimal
-    addition at (38,10) is EXACT at embedding magnitudes, so the
-    left-to-right fold equals the oracle's order-free group sum bit for
-    bit. Runs per-row in the scan (no explode, no join, no shuffle):
-    the portable trainer's whole point vs the long-form
-    kmeans_clusters_portable shape, which pays an n×dim×k join-aggregate
-    per iteration.
-
-    Precision note: the fold runs at DECIMAL(28,10), NOT (38,10) —
-    Spark's decimal ADD rule is (p,s)+(p,s) → (p+1, s) capped at 38,
-    and at p=38 the cap is paid by dropping the scale to 9, silently
-    rounding away the 10th digit each step (and type-mismatching the
-    accumulator). At p=28 the add yields (29,10) — scale intact, value
-    exact — and the cast back to (28,10) is lossless because |dot| is
-    bounded by dim·max|x·c| ≪ 10^18. A double cast to (28,10) rounds
-    identically to a cast to (38,10), so the addends — and therefore
-    the exact sum — still equal the oracle's
-    ``sum(CAST(x*c AS DECIMAL(38,10)))`` addends bit for bit."""
-    acc_t = "decimal(28,10)"
-    prods = F.zip_with(
-        vec,
-        _centroid_literal_array(cvec),
-        lambda a, b: (a.cast("double") * b).cast(acc_t),
-    )
-    return F.aggregate(
-        prods,
-        F.lit(0).cast(acc_t),
-        lambda acc, v: (acc + v).cast(acc_t),
-    ).cast("double")
-
-
 def _qname(name: str) -> str:
     """Backtick-quoted column reference for textual SQL (dots legal in
     column names — the profiler's ``_qcol`` discipline)."""
     return "`" + name.replace("`", "``") + "`"
 
 
+def _vectors(
+    df: DataFrame, id_col: str, vec_col: str, id_name: str, vec_name: str
+) -> DataFrame:
+    """``df``'s (id, vector) columns renamed to (``id_name``,
+    ``vec_name``), keeping only rows whose vector is non-NULL with every
+    component a finite number — the input contract of every IVF/k-means
+    entry point.
+
+    ``id_col`` and ``vec_col`` are literal top-level column names: a dot
+    is part of the name (``"emb.v"``), never struct access, so nested
+    struct paths are not supported — project the field to a top-level
+    column first. A NULL, NaN or ±Inf component has no decimal product:
+    the cast yields NULL, which turns every dot NULL and silently files
+    the vector under list 0 (or, under ANSI mode, fails the query), so
+    such vectors are dropped like NULL vectors; the DuckDB twin's
+    ``src`` CTE (catalog ``_duck_kmeans_prefix``) applies the same
+    filter."""
+    v = _qname(vec_name)
+    finite = (
+        f"{v} IS NOT NULL AND forall({v}, x -> x IS NOT NULL AND NOT isnan(x) "
+        "AND abs(x) != CAST('Infinity' AS DOUBLE))"
+    )
+    return df.select(
+        F.col(_qname(id_col)).alias(id_name), F.col(_qname(vec_col)).alias(vec_name)
+    ).filter(F.expr(finite))
+
+
 def _ranked_lists_sql(vec_sql: str, cents: list[list[float]]) -> str:
     """Spark SQL source of the ranked (dot, list_id) struct array over
     ``vec_sql`` — see :func:`_portable_ranked_lists` for semantics. Split
-    out so the whole expression is ONE ``F.expr`` parse."""
+    out so the whole expression is ONE ``F.expr`` parse.
+
+    Each product is computed in DOUBLE, then cast to DECIMAL — exactly
+    the addend the DuckDB twin's ``sum(CAST(x * c AS DECIMAL(38,10)))``
+    sums — and decimal addition is EXACT at embedding magnitudes, so the
+    left-to-right fold equals the oracle's order-free group sum bit for
+    bit. The fold runs at DECIMAL(28,10), NOT (38,10): Spark's decimal
+    ADD rule is (p,s)+(p,s) → (p+1, s) capped at 38, and at p=38 the cap
+    is paid by dropping the scale to 9, silently rounding away the 10th
+    digit each step (and type-mismatching the accumulator). At p=28 the
+    add yields (29,10) — scale intact, value exact — and the cast back
+    to (28,10) is lossless because |dot| is bounded by dim·max|x·c| ≪
+    10^18. A double cast to (28,10) rounds identically to a cast to
+    (38,10), so the addends still equal the oracle's addends."""
     acc = "DECIMAL(28,10)"
     # one array<array<double>> literal via ONE SQL parse (r13
     # optimization round): F.lit(nested list) expands element-wise
@@ -496,10 +342,6 @@ def _ranked_lists_sql(vec_sql: str, cents: list[list[float]]) -> str:
     # parsed form constant-folds to a single Literal. The literal VALUES
     # are identical IEEE doubles (repr round-trip).
     cmat = "array(" + ",".join(_double_array_sql(cv) for cv in cents) + ")"
-    # the same ops, casts and fold order as the r13 Column-API form
-    # (zip_with product at DECIMAL(28,10), left fold with per-step cast,
-    # final CAST AS DOUBLE) — see _portable_dot_literal for the decimal
-    # discipline and its oracle-parity argument
     dot = (
         f"CAST(aggregate(zip_with({vec_sql}, element_at({cmat}, i), "
         f"(a, b) -> CAST((CAST(a AS DOUBLE) * b) AS {acc})), "
@@ -521,25 +363,74 @@ def _portable_ranked_lists(vec_col: str, cents: list[list[float]]):
     """Array of (dot, list_id) structs sorted desc-by-dot / asc-by-list —
     element 1 is the argmax assignment (ties → smallest list_id, the
     DuckDB twin's ``ORDER BY dot DESC, list_id``), a slice of the first
-    n_probe is the probe set. ``vec_col`` is the COLUMN NAME of the
-    vector (r14: the whole expression is one textual SQL parse, so the
-    reference must be a name, not a Column).
+    n_probe is the probe set. ``vec_col`` is the literal COLUMN NAME of
+    the vector (r14: the whole expression is one textual SQL parse, so
+    the reference must be a name, not a Column).
 
     Built as ONE transform over a nested centroid-matrix literal, not k
-    separate ``_portable_dot_literal`` trees: the k-tree form carried
+    separate per-centroid dot trees: the k-tree form carried
     k×(zip_with + aggregate) expression nodes and its ANALYSIS cost
     dominated the whole trainer (measured 11 s of a 15 s sf0.01 run,
     r13) — the single-tree form shares one dot subtree across all k
     centroids and only the 2-D literal grows with k. Built via ONE
     ``F.expr`` SQL parse (r14): the r13 Column-API form still paid
     ~0.22 s of driver-side py4j round-trips per call (lambda plumbing ×
-    transform/zip_with/aggregate/array_sort), ×4 calls per ANN entry
-    (2 trainer iterations + corpus labeling + query probes) ≈ 0.9 s of
-    pure expression-BUILD wall per entry; the parse costs ~5 ms and
-    yields the same resolved operators, casts, and fold order, so the
-    per-row arithmetic — and therefore oracle replay — is unchanged
-    (re-verified: full similarity-family exact sweep, r14)."""
+    transform/zip_with/aggregate/array_sort); the parse costs ~5 ms and
+    yields the same resolved operators, casts, and fold order."""
     return F.expr(_ranked_lists_sql(_qname(vec_col), cents))
+
+
+def _nearest_list(vec_col: str, cents: list[list[float]]):
+    """``list_id`` of the nearest centroid (element 1 of the ranked
+    lists) — the label of a corpus vector."""
+    return F.element_at(_portable_ranked_lists(vec_col, cents), 1)["list_id"]
+
+
+def _probe_lists(q: DataFrame, cents: list[list[float]], n_probe: int) -> DataFrame:
+    """(query_id, qv) → (query_id, qv, list_id), one row per each
+    query's ``n_probe`` nearest lists.
+
+    Slice first, explode in a separate select: a generator and the
+    struct-building sort lambda must not co-resolve in one projection
+    (the analyzer fails with FIELD_NOT_FOUND on the struct fields)."""
+    return (
+        q.select(
+            "query_id",
+            "qv",
+            F.slice(_portable_ranked_lists("qv", cents), 1, n_probe).alias("__pr"),
+        )
+        .select("query_id", "qv", F.explode("__pr").alias("__p"))
+        .select("query_id", "qv", F.col("__p")["list_id"].alias("list_id"))
+    )
+
+
+def _vector_norm(vec):
+    """Decimal-exact L2 norm of an array column: the
+    :func:`_centroid_norms` fold, with elements cast to double first
+    (float widens to double exactly, so the products match the
+    collected-literal path bit for bit)."""
+    acc_t = "decimal(28,10)"
+    return F.sqrt(
+        F.aggregate(
+            vec,
+            F.lit(0).cast(acc_t),
+            lambda acc, v: (
+                acc + (v.cast("double") * v.cast("double")).cast(acc_t)
+            ).cast(acc_t),
+        ).cast("double")
+    )
+
+
+def _scale_rows(mat: list[list[float]], norms: list[float]) -> list[list[float]]:
+    """Divide each row by its norm; zero-norm rows pass through unchanged
+    (same CASE as the DuckDB twin's ``_duck_kmeans_norm``). Plain IEEE
+    double division — identical in Python and the JVM."""
+    return [
+        [v / norms[i] for v in cv]
+        if norms[i] and norms[i] > 0
+        else [float(v) for v in cv]
+        for i, cv in enumerate(mat)
+    ]
 
 
 def _normalize_centroid_matrix(spark, cents: list[list[float]]) -> list[list[float]]:
@@ -549,18 +440,10 @@ def _normalize_centroid_matrix(spark, cents: list[list[float]]) -> list[list[flo
     (:func:`_centroid_norms` — no distributed job), so the double divisor
     is bit-identical to the distributed
     ``sqrt(CAST(sum(CAST(c*c AS DECIMAL(38,10))) AS DOUBLE))`` both
-    engines compute. The per-element division c/nrm is plain IEEE double
-    division — identical in Python and the JVM. Zero-norm centroids pass
-    through unchanged (same CASE as the oracle)."""
+    engines compute."""
     if not cents:
         return []
-    norms = _centroid_norms(spark, cents)
-    return [
-        [v / norms[i] for v in cv]
-        if norms[i] and norms[i] > 0
-        else [float(v) for v in cv]
-        for i, cv in enumerate(cents)
-    ]
+    return _scale_rows(cents, _centroid_norms(spark, cents))
 
 
 def _centroid_norms(spark, cents: list[list[float]]) -> list[float]:
@@ -574,7 +457,7 @@ def _centroid_norms(spark, cents: list[list[float]]) -> list[float]:
     collected driver-side; measured 2-5.6 s → ~0.15 s per call). The
     (28,10) fold equals the distributed order-free
     ``sum(CAST(c*c AS DECIMAL(38,10)))`` bit for bit — decimal addition
-    is exact at these magnitudes (see ``_portable_dot_literal``)."""
+    is exact at these magnitudes (see ``_ranked_lists_sql``)."""
     row = (
         spark.sql("SELECT 1 AS z")
         .select(F.expr(_centroid_norms_sql(cents)).alias("n"))
@@ -602,17 +485,18 @@ def _centroid_norms_sql(cents: list[list[float]]) -> str:
 
 
 def _portable_centroid_literals(
-    corpus: DataFrame,
-    id_col: str,
-    vec_col: str,
+    src: DataFrame,
+    id_name: str,
+    vec_name: str,
     n_centroids: int,
     refine_iters: int,
 ) -> list[list[float]]:
-    """Engine-portable IVF/k-means trainer returning the centroids as
-    driver-side floats (O(k·dim) model state, the same posture as
-    :func:`_ivf_centroids`'s numpy path) — semantics identical to
-    :func:`kmeans_clusters_portable`'s loop, replayed step-for-step by
-    the DuckDB Lloyd unroll (catalog ``_duck_kmeans_iter``):
+    """The IVF/k-means trainer: spherical k-means over ``src``'s
+    (``id_name``, ``vec_name``) rows — already through :func:`_vectors` —
+    returning the L2-normalized centroids as driver-side floats
+    (O(k·dim) model state). Every step is decimal-exact and replayed
+    step-for-step by the DuckDB Lloyd unroll (catalog
+    ``_duck_kmeans_iter``):
 
     - seeding: the ``n_centroids`` rows with the smallest
       ``(portable_hash64(id), id)``; list_id = that order's 0-based rank;
@@ -624,16 +508,16 @@ def _portable_centroid_literals(
       k·dim groups; empty clusters keep their previous centroid;
     - normalization: decimal squared-norm sum → double divisor.
 
+    Raises ``ValueError`` when ``src`` has no row to seed from.
+
     Physical shape (r14 optimization round — §2.4 stage-latency
     amortization, VERDICT r13 task 2): the seed TakeOrdered job ALSO
-    evaluates each seed vector's decimal squared-norm (the same
-    expression tree :func:`_centroid_norms` applies to literals,
-    elements cast to double first — exact widening), so the post-seed
-    ``_normalize_centroid_matrix`` local collect is gone; the driver
-    only divides. Each Lloyd iteration stays ONE distributed action —
-    scan → per-row literal-centroid argmax → posexplode → k·dim-group
-    decimal mean → collect(k·dim rows) — followed by the r13
-    OneRowRelation norm collect.
+    evaluates each seed vector's decimal squared-norm
+    (:func:`_vector_norm`), so the post-seed normalization needs no
+    local collect; the driver only divides. Each Lloyd iteration is ONE
+    distributed action — scan → per-row literal-centroid argmax →
+    posexplode → k·dim-group decimal mean → collect(k·dim rows) —
+    followed by the r13 OneRowRelation norm collect.
 
     Two deeper folds were BUILT, MEASURED and REVERTED (r14):
 
@@ -649,80 +533,41 @@ def _portable_centroid_literals(
       this shape's invariant is that the corpus never shuffles. Not
       built.
 
-    The pre-r13 long-form chain
-    (assign via broadcast-join + per-id window, means via an xe⋈assign
-    shuffle join, normalize via groupBy+broadcast-join, all unrolled into
-    a single ~22-stage plan) paid ~0.4-0.5 s of stage latency per stage
-    on the bench box with trivially small data per stage; this shape is
-    ~5 stages total. Normalization and the empty-cluster coalesce happen
-    driver-side, with the one non-trivial arithmetic step (the decimal
-    squared-norm sum) still evaluated by Spark's expression engine
-    so no engine-replication risk is
-    introduced. Value-identity with the long form (and therefore with the
-    DuckDB unroll): the per-row literal argmax equals the group-sum argmax
-    because both sum the identical 10-decimal-rounded addends exactly
-    (the established ``_portable_dot_literal`` argument — this identity
-    is already load-bearing for the corpus labeling step the oracle
-    checks); the decimal mean expression is unchanged; collect round-trips
-    IEEE doubles exactly. Scale posture: per iteration the corpus is
-    scanned once and only k·dim aggregated rows cross an exchange — the
-    corpus itself never shuffles (pass a persisted corpus to amortize the
+    Value identity with the DuckDB unroll: the per-row literal argmax
+    equals the oracle's group-sum argmax because both sum the identical
+    10-decimal-rounded addends exactly (see ``_ranked_lists_sql``); the
+    decimal mean expression is the oracle's; collect round-trips IEEE
+    doubles exactly. Scale posture: per iteration the corpus is scanned
+    once and only k·dim aggregated rows cross an exchange — the corpus
+    itself never shuffles (pass a persisted corpus to amortize the
     scans, as the clustered catalog entries do)."""
     from ..functions import portable_hash64
 
-    spark = corpus.sparkSession
-    src = corpus.filter(F.col(vec_col).isNotNull())
-    ph = portable_hash64(F.col(id_col).cast("string"))
-    acc_t = "decimal(28,10)"
-    # the exact _centroid_norms fold over the vector COLUMN (elements
-    # cast to double first — float widens to double exactly, so the
-    # products match the collected-literal path bit for bit)
-    col_norm = F.sqrt(
-        F.aggregate(
-            F.col("__v"),
-            F.lit(0).cast(acc_t),
-            lambda a, v: (
-                a + (v.cast("double") * v.cast("double")).cast(acc_t)
-            ).cast(acc_t),
-        ).cast("double")
-    )
+    spark = src.sparkSession
+    ph = portable_hash64(F.col(id_name).cast("string"))
     seed_rows = (
         src.select(
-            F.col(id_col).alias("id"), ph.alias("__ph"), F.col(vec_col).alias("__v")
+            F.col(id_name).alias("id"), ph.alias("__ph"), F.col(vec_name).alias("__v")
         )
         .orderBy("__ph", "id")
         .limit(n_centroids)
-        .select("__v", col_norm.alias("__n"))
+        .select("__v", _vector_norm(F.col("__v")).alias("__n"))
         .collect()
     )
     if not seed_rows:
-        # same explicit contract as _ivf_centroids' empty-corpus guard
         raise ValueError("corpus is empty: cannot seed k-means centroids")
-
-    def _divide(mat: list[list[float]], norms: list[float]) -> list[list[float]]:
-        # the _normalize_centroid_matrix division, norms precomputed
-        return [
-            [v / norms[i] for v in cv]
-            if norms[i] and norms[i] > 0
-            else [float(v) for v in cv]
-            for i, cv in enumerate(mat)
-        ]
-
     # collected floats widen to Python doubles exactly — the same values
-    # xe's cast(xf as double) produced in the long form
-    cents = _divide(
+    # the oracle's CAST(v AS DOUBLE) produces
+    cents = _scale_rows(
         [[float(x) for x in r["__v"]] for r in seed_rows],
         [r["__n"] for r in seed_rows],
     )
     src_wide = _fan_out(src)
     for _ in range(refine_iters):
-        # slice/struct-lambda co-resolution: keep the generator in its own
-        # select (see the FIELD_NOT_FOUND note at the ivf_topk probe site)
+        # the generator stays in its own select (see _probe_lists)
         assigned = src_wide.select(
-            F.col(vec_col).alias("__v"),
-            F.element_at(_portable_ranked_lists(vec_col, cents), 1)[
-                "list_id"
-            ].alias("list_id"),
+            F.col(vec_name).alias("__v"),
+            _nearest_list(vec_name, cents).alias("list_id"),
         )
         mean_rows = (
             assigned.select("list_id", F.posexplode("__v").alias("pos", "xf"))
@@ -745,119 +590,9 @@ def _portable_centroid_literals(
     return cents
 
 
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    refine_iters: int = 2,
-    seed: int = 11,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    portable: bool = False,
-) -> DataFrame:
-    """Approximate NN via an IVF (inverted-file) partition of the corpus.
-
-    Train ``n_centroids`` cosine centroids (deterministic seed + Lloyd
-    steps, see ``_ivf_centroids``), label each corpus vector with its
-    nearest centroid (narrow), expand each query to its ``n_probe``
-    nearest lists, equi-join query probes to corpus labels on ``list_id``,
-    exact-rerank candidates by cosine, two-phase top-k.
-
-    Scale posture vs LSH: same candidate-join shape, but the partition is
-    data-adaptive (centroids follow density) so probe lists capture near
-    neighbors with far fewer candidates per query on clustered corpora.
-    At warehouse scale the labeled corpus IS the index — write it
-    ``partitionBy("list_id")`` once and every probe join becomes a
-    partition-pruned scan of n_probe/n_centroids of the data; this
-    function recomputes labels inline because the bench corpus is read
-    fresh each call. Cluster-size skew (a hot list) is bounded by
-    n_centroids sizing; AQE skew-join handles the residual.
-
-    ``portable=True`` (VERDICT r12 task 2b) swaps the numpy trainer for
-    :func:`_portable_centroid_literals` (md5-parity seeding + decimal-
-    exact Lloyd steps) and assigns labels/probes with decimal-exact
-    literal-centroid dots — making the trained lists, the candidate set,
-    the rerank, and the full top-k replayable hash-for-hash by a DuckDB
-    oracle (the catalog's unrolled-Lloyd twin). Same plan shape: the
-    corpus still never shuffles (assignment is per-row in the scan,
-    probes broadcast); the decimal folds cost more per row than the
-    Arrow matmul, so the default stays the throughput path.
-    """
-    if portable:
-        cents_lit = _portable_centroid_literals(
-            corpus, id_col, vec_col, n_centroids, refine_iters
-        )
-        c = corpus.filter(F.col(vec_col).isNotNull()).select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-        )
-        q = queries.filter(F.col(vec_col).isNotNull()).select(
-            F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qv")
-        )
-        labeled = _fan_out(c).withColumn(
-            "list_id",
-            F.element_at(_portable_ranked_lists("cv", cents_lit), 1)[
-                "list_id"
-            ],
-        )
-        # slice first, explode in a separate select: the generator and
-        # the struct-building lambda must not co-resolve (see the
-        # FIELD_NOT_FOUND note in _portable_centroid_literals)
-        probes = (
-            q.select(
-                "query_id",
-                "qv",
-                F.slice(
-                    _portable_ranked_lists("qv", cents_lit),
-                    1,
-                    n_probe,
-                ).alias("__pr"),
-            )
-            .select("query_id", "qv", F.explode("__pr").alias("__p"))
-            .select(
-                "query_id", "qv", F.col("__p")["list_id"].alias("__plist")
-            )
-        )
-        # Null-safe join key + explicit not-null filter on the TINY side
-        # (r13 optimization round): a plain equi-join makes
-        # InferFiltersFromConstraints derive isnotnull(list_id) for BOTH
-        # sides and push it below the exchange, re-evaluating the whole
-        # per-row decimal argmax in a single-task pre-shuffle Filter
-        # (measured 2.3 s of the rerank's 2.8 s at sf0.1). `<=>` implies
-        # no not-null constraints, and filtering null probes on the
-        # broadcast side (a few rows — the re-evaluation is free there)
-        # makes the result identical to the equi-join for every input:
-        # with no null probe keys, corpus rows with a null list_id can
-        # match nothing under either join.
-        cand = (
-            F.broadcast(probes.filter(F.col("__plist").isNotNull()))
-            .join(labeled, F.col("__plist").eqNullSafe(F.col("list_id")))
-            .select("query_id", "neighbor_id", "qv", "cv")
-        )
-        scored = cand.select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                cosine_similarity(F.col("qv"), F.col("cv")), 6
-            ).alias("cosine"),
-        )
-        return _rank_topk(_partition_topk(scored, k), k)
-
-    cents = _ivf_centroids(
-        corpus, id_col, vec_col, n_centroids, refine_iters, seed
-    )
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    labeled = _ivf_assign(c, "neighbor_id", "cv", cents, n_probe=1)
-    probes = _ivf_assign(q, "query_id", "qv", cents, n_probe=n_probe)
-
-    cand = F.broadcast(probes).join(labeled, "list_id").select(
-        "query_id", "neighbor_id", "qv", "cv"
-    )
+def _cosine_rerank(cand: DataFrame, k: int) -> DataFrame:
+    """Exact cosine rerank of (query_id, neighbor_id, qv, cv) candidates,
+    then the two-phase top-k."""
     scored = cand.select(
         "query_id",
         "neighbor_id",
@@ -866,31 +601,104 @@ def ivf_topk(
     return _rank_topk(_partition_topk(scored, k), k)
 
 
+def ivf_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int = 10,
+    n_centroids: int = 16,
+    n_probe: int = 4,
+    refine_iters: int = 2,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    query_id_col: str = "query_id",
+) -> DataFrame:
+    """Approximate NN via an IVF (inverted-file) partition of the corpus.
+
+    Train ``n_centroids`` spherical k-means centroids
+    (:func:`_portable_centroid_literals`: md5-parity seeding +
+    decimal-exact Lloyd steps), label each corpus vector with its
+    nearest centroid, expand each query to its ``n_probe`` nearest
+    lists, join query probes to corpus labels on ``list_id``,
+    exact-rerank candidates by cosine, two-phase top-k. Every step is
+    decimal-exact, so the trained lists, the candidate set, the rerank
+    and the full top-k replay hash-for-hash in the catalog's DuckDB twin
+    (``_duck_ivf_topk_sql``).
+
+    Scale posture vs LSH: same candidate-join shape, but the partition is
+    data-adaptive (centroids follow density) so probe lists capture near
+    neighbors with far fewer candidates per query on clustered corpora.
+    Assignment is per-row in the scan and probes broadcast, so the
+    corpus never shuffles. At warehouse scale the labeled corpus IS the
+    index — :func:`build_ivf_index` writes it ``partitionBy("list_id")``
+    once and every probe becomes a partition-pruned scan of
+    n_probe/n_centroids of the data; this function recomputes labels
+    inline. Cluster-size skew (a hot list) is bounded by n_centroids
+    sizing; AQE skew-join handles the residual.
+
+    ``id_col``, ``vec_col`` (and ``query_id_col``) are literal top-level
+    column names — dots allowed, nested struct paths not supported — and
+    NULL vectors or vectors with a NULL, NaN or ±Inf component are
+    dropped (:func:`_vectors`).
+    """
+    c = _vectors(corpus, id_col, vec_col, "neighbor_id", "cv")
+    q = _vectors(queries, query_id_col, vec_col, "query_id", "qv")
+    cents = _portable_centroid_literals(
+        c, "neighbor_id", "cv", n_centroids, refine_iters
+    )
+    labeled = _fan_out(c).withColumn("list_id", _nearest_list("cv", cents))
+    probes = _probe_lists(q, cents, n_probe).withColumnRenamed("list_id", "__plist")
+    # Null-safe join key + explicit not-null filter on the TINY side
+    # (r13 optimization round): a plain equi-join makes
+    # InferFiltersFromConstraints derive isnotnull(list_id) for BOTH
+    # sides and push it below the exchange, re-evaluating the whole
+    # per-row decimal argmax in a single-task pre-shuffle Filter
+    # (measured 2.3 s of the rerank's 2.8 s at sf0.1). `<=>` implies
+    # no not-null constraints, and filtering null probes on the
+    # broadcast side (a few rows — the re-evaluation is free there)
+    # makes the result identical to the equi-join for every input:
+    # with no null probe keys, corpus rows with a null list_id can
+    # match nothing under either join.
+    cand = (
+        F.broadcast(probes.filter(F.col("__plist").isNotNull()))
+        .join(labeled, F.col("__plist").eqNullSafe(F.col("list_id")))
+        .select("query_id", "neighbor_id", "qv", "cv")
+    )
+    return _cosine_rerank(cand, k)
+
+
 def build_ivf_index(
     corpus: DataFrame,
     path: str,
     n_centroids: int = 16,
     refine_iters: int = 2,
-    seed: int = 11,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
     """Persist an IVF index: the labeled corpus written
-    ``partitionBy(list_id)`` plus the centroid matrix as a tiny parquet.
+    ``partitionBy(list_id)`` plus the centroid matrix as a tiny parquet
+    (``list_id``, ``centroid``).
 
     The partitioned layout is the point — a probe of n_probe lists becomes
     a partition-pruned scan reading n_probe/n_centroids of the corpus
     (PartitionFilters in the plan), which is what makes IVF pay at 100 TB:
     index once, then every query touches only its probed fraction.
+    Training and labels are :func:`ivf_topk`'s, so every vector's
+    ``list_id`` equals the DuckDB twin's label.
+
+    ``id_col`` and ``vec_col`` are literal top-level column names — dots
+    allowed, nested struct paths not supported — and NULL vectors or
+    vectors with a NULL, NaN or ±Inf component are dropped
+    (:func:`_vectors`).
     """
     import pandas as pd
 
     spark = corpus.sparkSession
-    cents = _ivf_centroids(
-        corpus, id_col, vec_col, n_centroids, refine_iters, seed
-    )
-    labeled = _ivf_assign(
-        corpus.select(F.col(id_col), F.col(vec_col)), id_col, vec_col, cents
+    src = _vectors(corpus, id_col, vec_col, "__id", "__v")
+    cents = _portable_centroid_literals(src, "__id", "__v", n_centroids, refine_iters)
+    labeled = _fan_out(src).select(
+        F.col("__id").alias(id_col),
+        F.col("__v").alias(vec_col),
+        _nearest_list("__v", cents).alias("list_id"),
     )
     # cluster by the write-partition key before partitionBy (guide §6):
     # with a multi-partition input every task would otherwise open a file
@@ -900,9 +708,9 @@ def build_ivf_index(
     labeled.repartition("list_id").write.mode("overwrite").partitionBy(
         "list_id"
     ).parquet(f"{path}/corpus")
-    cpdf = pd.DataFrame(
-        {"list_id": range(len(cents)), "centroid": [c.tolist() for c in cents]}
-    )
+    # from pandas: the Arrow path ships the k×dim doubles without a
+    # Python worker (a list of tuples measured ~1 s slower per build)
+    cpdf = pd.DataFrame({"list_id": range(len(cents)), "centroid": cents})
     spark.createDataFrame(cpdf).coalesce(1).write.mode("overwrite").parquet(
         f"{path}/centroids"
     )
@@ -922,50 +730,44 @@ def ivf_index_topk(
     to probe lists, scan ONLY those ``list_id=`` partitions of the indexed
     corpus (``isin`` filter on the partition column → partition pruning),
     exact-rerank, two-phase top-k. Same results as ``ivf_topk`` with the
-    same centroids; the corpus scan cost drops to n_probe/n_centroids.
+    same parameters: the centroids come back from parquet as the exact
+    doubles the trainer produced, and probes use the same decimal-exact
+    assignment expression (JVM-side, no Python worker). Column names
+    and dropped query vectors as in :func:`build_ivf_index`.
     """
-    import numpy as np
-
     rows = spark.read.parquet(f"{path}/centroids").collect()
     if not rows:
         raise ValueError(
             f"ivf_index_topk: no centroids under {path}/centroids — run "
             "build_ivf_index first (empty or corrupt index)"
         )
-    cents = np.zeros((len(rows), len(rows[0]["centroid"])))
+    cents: list[list[float]] = [[] for _ in rows]
     for r in rows:
-        cents[r["list_id"]] = r["centroid"]
+        cents[r["list_id"]] = [float(x) for x in r["centroid"]]
 
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
+    q = _vectors(queries, query_id_col, vec_col, "query_id", "qv")
     # collect the (small, broadcastable-by-contract) probe assignments
-    # ONCE and rebind as a local relation: the lazy plan used to execute
-    # the assignment mapInPandas twice — once for the distinct list-id
-    # pull, again inside the broadcast join (r8 review)
-    probes_local = _ivf_assign(
-        q, "query_id", "qv", cents, n_probe=n_probe
-    )
-    probe_rows = probes_local.collect()
-    probes = spark.createDataFrame(probe_rows, probes_local.schema)
-    probe_lists = sorted({r["list_id"] for r in probe_rows})
-    labeled = spark.read.parquet(f"{path}/corpus").filter(
-        F.col("list_id").isin(probe_lists)  # partition-pruned scan
-    )
-    c = labeled.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        "list_id",
+    # ONCE and rebind them as a local relation, so the static IN-list the
+    # corpus scan prunes on and the join see the same probes even when
+    # ``queries`` is nondeterministic (a sample); the Arrow round trip
+    # keeps the rebind free of Python-worker jobs
+    plan = _probe_lists(q, cents, n_probe)
+    local = plan.toPandas()
+    probes = spark.createDataFrame(local, plan.schema)
+    probe_lists = sorted(int(x) for x in set(local["list_id"]))
+    c = (
+        spark.read.parquet(f"{path}/corpus")
+        .filter(F.col("list_id").isin(probe_lists))  # partition-pruned scan
+        .select(
+            F.col(_qname(id_col)).alias("neighbor_id"),
+            F.col(_qname(vec_col)).alias("cv"),
+            "list_id",
+        )
     )
     cand = F.broadcast(probes).join(c, "list_id").select(
         "query_id", "neighbor_id", "qv", "cv"
     )
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        F.round(cosine_similarity(F.col("qv"), F.col("cv")), 6).alias("cosine"),
-    )
-    return _rank_topk(_partition_topk(scored, k), k)
+    return _cosine_rerank(cand, k)
 
 
 def lsh_ann_topk(
@@ -1048,12 +850,7 @@ def lsh_ann_topk(
         .select("query_id", "neighbor_id", "qv", "cv")
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        F.round(cosine_similarity(F.col("qv"), F.col("cv")), 6).alias("cosine"),
-    )
-    return _rank_topk(_partition_topk(scored, k), k)
+    return _cosine_rerank(cand, k)
 
 
 def quantize_int8(
@@ -1136,7 +933,6 @@ def kmeans_clusters(
     corpus: DataFrame,
     n_centroids: int = 16,
     refine_iters: int = 2,
-    seed: int = 11,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -1145,125 +941,60 @@ def kmeans_clusters(
     diversity sampling, topic balance, and per-cluster quotas in a
     training-data pipeline; the same labels ARE the IVF index lists).
 
-    Returns (id, list_id, cos_to_centroid). Same scale shape as IVF:
-    centroids are O(k·dim) driver-side model state, assignment is one
-    narrow matmul pass, and the per-cluster cosine comes from a broadcast
-    join with the tiny centroid table — the corpus never shuffles.
+    Returns (``id_col``, list_id, cos_to_centroid). Every arithmetic step
+    follows the repo's cross-engine determinism discipline, so the DuckDB
+    twin behind ``embedding_cluster_profile`` replays labels AND cosines
+    exactly:
+
+    - training: :func:`_portable_centroid_literals` (md5-parity seeding,
+      decimal-exact Lloyd steps, empty clusters keep their centroid);
+    - assignment: ``argmax_k Σ_i x_i·c_ki`` with the inner product as an
+      exact decimal sum; cosine argmax ≡ dot argmax because the row norm
+      is a positive per-row constant. Ties break on the smaller list_id;
+    - ``cos_to_centroid`` = round(dot / (|x|·|c|), 6) with decimal-exact
+      norms; NULL for a zero vector.
+
+    ``id_col`` and ``vec_col`` are literal top-level column names — dots
+    allowed, nested struct paths not supported — and NULL vectors or
+    vectors with a NULL, NaN or ±Inf component are dropped
+    (:func:`_vectors`). Raises ``ValueError`` when no vector is left (the
+    trainer needs at least one seed vector).
+
+    Physical shape: training, then a single fan-out labeling scan with
+    the centroids as literals — per-row argmax dot, per-row decimal
+    squared-norm, and the centroid norms as a constant-folded k-element
+    literal. The corpus never shuffles and nothing corpus-sized is
+    cached.
     """
-    cents = _ivf_centroids(corpus, id_col, vec_col, n_centroids, refine_iters, seed)
-    assigned = _ivf_assign(
-        corpus.select(id_col, vec_col), id_col, vec_col, cents, n_probe=1
-    )
-    spark = corpus.sparkSession
-    cent_rows = [(i, [float(x) for x in c]) for i, c in enumerate(cents)]
-    cent_df = spark.createDataFrame(
-        cent_rows, "list_id int, centroid array<double>"
-    )
-    return assigned.join(F.broadcast(cent_df), "list_id").select(
-        F.col(id_col),
-        "list_id",
-        F.round(
-            cosine_similarity(F.col(vec_col).cast("array<double>"), F.col("centroid")),
-            6,
-        ).alias("cos_to_centroid"),
-    )
-
-
-def kmeans_clusters_portable(
-    corpus: DataFrame,
-    n_centroids: int = 16,
-    refine_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Engine-portable spherical k-means — same semantics as
-    :func:`kmeans_clusters` (seeded init, Lloyd refinement, returns
-    (id, list_id, cos_to_centroid)) but every arithmetic step follows
-    the repo's cross-engine determinism discipline, so a DuckDB oracle
-    replays labels AND cosines exactly (VERDICT r11 task 4a).
-
-    Raises ``ValueError`` on an empty or all-null-vector corpus (since
-    r13: the trainer needs at least one seed vector; earlier rounds
-    returned an empty frame here — the explicit raise replaces a
-    garbage-literal failure mode deeper in the trainer, documented per
-    ADVICE r13). Contract details:
-
-    - seeding: the ``n_centroids`` rows with the smallest
-      ``(portable_hash64(id), id)`` — md5-derived, both engines agree;
-      ``list_id`` is that order's 0-based rank.
-    - assignment: ``argmax_k Σ_i x_i·c_ki`` with the inner product as a
-      DECIMAL(38,10) sum (order-independent, so partitioning cannot
-      perturb the double that enters the comparison); cosine argmax ≡
-      dot argmax because the row norm is a positive per-row constant.
-      Ties break on the smaller list_id in both engines.
-    - update: per-dimension mean = decimal-sum / count; empty clusters
-      keep their previous centroid; L2 normalization via a decimal
-      squared-norm sum.
-
-    Physical shape (r13 optimization round): training runs through
-    :func:`_portable_centroid_literals` (seeds TakeOrdered + ONE
-    distributed action per Lloyd iteration — the collect-per-iteration
-    form that replaced the ~22-stage unrolled join/window chain), and the
-    final labeling is a single fan-out scan with the centroids as
-    literals: per-row argmax dot (``_portable_ranked_lists``), per-row
-    decimal squared-norm, and the centroid norms as a k-element literal
-    (``_centroid_norms``). Value identity with the previous long form —
-    and therefore with the DuckDB unroll that oracles
-    ``embedding_cluster_profile`` — follows from the established
-    ``_portable_dot_literal`` argument: every decimal fold sums the
-    identical 10-decimal-rounded addends exactly, so fold-vs-group-sum
-    order is immaterial, and the final round/divide expressions are
-    unchanged. The corpus never shuffles and nothing corpus-sized is
-    cached anymore (the r12 xe-cache leak class is gone by construction);
-    ``release_cache`` is kept as a no-op for the documented caller
-    contract.
-    """
-    src = corpus.filter(F.col(vec_col).isNotNull())
-    cents = _portable_centroid_literals(
-        src, id_col, vec_col, n_centroids, refine_iters
-    )
+    src = _vectors(corpus, id_col, vec_col, "__id", "__v")
+    cents = _portable_centroid_literals(src, "__id", "__v", n_centroids, refine_iters)
     # constant-foldable norm array over the final centroid literals —
     # evaluated by ConstantFolding inside the labeling job itself (r14:
     # replaces a _centroid_norms local collect; same expression, same
     # engine, identical bits)
     cn_lit = F.expr(_centroid_norms_sql(cents))
-    acc_t = "decimal(28,10)"
-    xn = F.sqrt(
-        F.aggregate(
-            F.col("__v"),
-            F.lit(0).cast(acc_t),
-            lambda acc, v: (
-                acc + (v.cast("double") * v.cast("double")).cast(acc_t)
-            ).cast(acc_t),
-        ).cast("double")
-    )
     # two-step select: the ranked-list argmax must be produced ONCE and
     # consumed by field access only — CollapseProject keeps the boundary
     # because the producing expression is non-cheap and referenced more
-    # than once (same discipline as the ivf_topk probe site)
+    # than once
     step = _fan_out(src).select(
-        F.col(id_col),
-        F.col(vec_col).alias("__v"),
-        F.element_at(_portable_ranked_lists(vec_col, cents), 1).alias(
-            "__r1"
-        ),
+        "__id",
+        "__v",
+        F.element_at(_portable_ranked_lists("__v", cents), 1).alias("__r1"),
     )
-    out = step.select(
-        F.col(id_col),
+    return step.select(
+        F.col("__id").alias(id_col),
         F.col("__r1")["list_id"].alias("list_id"),
         F.round(
             F.col("__r1")["dot"]
             / F.nullif(
-                xn * F.element_at(cn_lit, F.col("__r1")["list_id"] + 1),
+                _vector_norm(F.col("__v"))
+                * F.element_at(cn_lit, F.col("__r1")["list_id"] + 1),
                 F.lit(0.0),
             ),
             6,
         ).alias("cos_to_centroid"),
     )
-    # no corpus-sized cache remains in this shape; the attribute stays so
-    # existing callers' release_cache() contract keeps working unchanged
-    out.release_cache = lambda blocking=False: None
-    return out
 
 
 def _sign_on(seed: str):

@@ -424,7 +424,7 @@ def lang_id(
         # summation order and a DuckDB oracle can replay it with an
         # order-free group SUM — a double fold would pin the oracle to
         # the exact gram iteration order. p=28 keeps Spark's decimal ADD
-        # from dropping scale (see similarity._portable_dot_literal).
+        # from dropping scale (see similarity._ranked_lists_sql).
         acc_t = "decimal(28,10)"
         merged = F.create_map(
             *[

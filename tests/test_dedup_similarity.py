@@ -420,25 +420,16 @@ def test_kmeans_clusters_deterministic_and_sane(spark, sf_dir):
 
 
 def test_kmeans_clusters_portable_matches_semantics(spark, sf_dir):
-    """The engine-portable spherical k-means (decimal-sum discipline,
-    md5-parity seeding — VERDICT r11 task 4a) must be deterministic,
-    label every non-null vector exactly once, and produce sane cosines;
-    exact DuckDB parity is covered by the embedding_cluster_profile
-    oracle."""
-    from aws_cli_data_pipeline_tools_spark.operators.similarity import (
-        kmeans_clusters_portable,
-    )
+    """Spherical k-means (decimal-sum discipline, md5-parity seeding —
+    VERDICT r11 task 4a) must be deterministic row for row, label every
+    non-null vector exactly once, and produce sane cosines; exact DuckDB
+    parity is covered by the embedding_cluster_profile oracle."""
+    from aws_cli_data_pipeline_tools_spark.operators.similarity import kmeans_clusters
     from aws_cli_data_pipeline_tools_spark.sources import load_table
 
     emb = load_table(spark, "embeddings", sf_dir)
-    out1 = kmeans_clusters_portable(emb, n_centroids=8)
-    out2 = kmeans_clusters_portable(emb, n_centroids=8)
-    a = out1.collect()
-    b = out2.collect()
-    # corpus-sized exploded cache must be releasable by the caller
-    # (ADVICE r12 — accumulating persisted frames in long sessions)
-    out1.release_cache()
-    out2.release_cache()
+    a = kmeans_clusters(emb, n_centroids=8).collect()
+    b = kmeans_clusters(emb, n_centroids=8).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
     assert {r.list_id for r in a} <= set(range(8))
     assert len(a) == emb.filter(F.col("embedding").isNotNull()).count()
@@ -487,8 +478,8 @@ def test_lsh_ann_topk_portable_contract(spark, sf_dir):
 
 
 def test_ivf_topk_portable_contract_and_recall(spark, sf_dir):
-    """ivf_topk(portable=True) (r13, VERDICT r12 task 2b — the exact-
-    oracle construction behind the graduated ann_ivf_topk): must be
+    """ivf_topk (r13, VERDICT r12 task 2b — the exact-oracle
+    construction behind the graduated ann_ivf_topk): must be
     deterministic, retrieve every self-match at rank 1 with dense ranks,
     and keep the retrieval-quality floor the retired check_oracle
     invariant used to assert — recall@10 ≥ 0.7 vs brute-force cosine at
@@ -507,11 +498,11 @@ def test_ivf_topk_portable_contract_and_recall(spark, sf_dir):
     )
     out = ivf_topk(
         emb, queries, k=10, n_centroids=16, n_probe=8,
-        query_id_col="query_id", portable=True,
+        query_id_col="query_id",
     ).collect()
     again = ivf_topk(
         emb, queries, k=10, n_centroids=16, n_probe=8,
-        query_id_col="query_id", portable=True,
+        query_id_col="query_id",
     ).collect()
     assert sorted(map(tuple, out)) == sorted(map(tuple, again))
     by_q = {}
@@ -567,14 +558,13 @@ def test_lsh_clustered_portable_recall(spark, sf_dir):
 
 
 def test_ivf_clustered_portable_recall(spark, sf_dir):
-    """The graduated ann_ivf_topk_clustered operating point (16 portable
-    Lloyd lists, n_probe=1 — each query reads 1/16 of the corpus) must
-    keep its production-shaped recall floor vs brute-force cosine on the
-    planted-cluster corpus — the quality claim the retired check_oracle
-    invariant asserted (floor 0.9, the invariant's bound; the numpy
-    trainer measured 1.00 and the portable trainer's decimal-exact Lloyd
-    steps converge to the same planted partition). Replay fidelity is
-    the DuckDB oracle's job."""
+    """The graduated ann_ivf_topk_clustered operating point (16
+    decimal-exact Lloyd lists, n_probe=1 — each query reads 1/16 of the
+    corpus) must keep its production-shaped recall floor vs brute-force
+    cosine on the planted-cluster corpus — the quality claim the retired
+    check_oracle invariant asserted (floor 0.9, the invariant's bound;
+    the Lloyd steps converge to the planted partition). Replay fidelity
+    is the DuckDB oracle's job."""
     from aws_cli_data_pipeline_tools_spark.catalog.llmops import (
         clustered_embeddings,
     )
@@ -596,7 +586,7 @@ def test_ivf_clustered_portable_recall(spark, sf_dir):
         (r.query_id, r.neighbor_id)
         for r in ivf_topk(
             ce, queries, k=10, n_centroids=16, n_probe=1,
-            query_id_col="query_id", portable=True,
+            query_id_col="query_id",
         ).collect()
     }
     # self-match must always be retrievable at this operating point
@@ -604,6 +594,116 @@ def test_ivf_clustered_portable_recall(spark, sf_dir):
         assert (q, q) in got, f"self-match missing for query {q}"
     recall = len(got & exact) / len(exact)
     assert recall >= 0.9, f"clustered portable IVF recall@10 {recall:.2f} < 0.9"
+
+
+def test_ivf_index_labels_match_duckdb_twin(spark, sf_dir, tmp_path):
+    """build_ivf_index trains and labels with the decimal-exact trainer,
+    so every indexed vector's list_id equals the DuckDB twin's ``lab``
+    CTE — the labels the ann_ivf_topk oracle replays."""
+    import duckdb
+
+    from aws_cli_data_pipeline_tools_spark.catalog.llmops import (
+        _duck_ivf_labels,
+        _duck_kmeans_prefix,
+    )
+
+    idx = str(tmp_path / "ivf")
+    similarity.build_ivf_index(
+        load_table(spark, "embeddings", sf_dir), idx, n_centroids=16,
+        refine_iters=2,
+    )
+    got = sorted(
+        tuple(r)
+        for r in spark.read.parquet(f"{idx}/corpus")
+        .select("vec_id", "list_id")
+        .collect()
+    )
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM '{sf_dir}/embeddings.parquet'"
+    )
+    want = sorted(
+        con.execute(
+            f"WITH {_duck_kmeans_prefix(16, 2)}, {_duck_ivf_labels(2)} "
+            "SELECT neighbor_id, list_id FROM lab"
+        ).fetchall()
+    )
+    assert len(got) == con.execute("SELECT count(*) FROM embeddings").fetchone()[0]
+    assert got == want
+
+
+def test_ivf_kmeans_drop_nonfinite_vectors(spark, tmp_path):
+    """A vector with a NaN, ±Inf or NULL component is dropped like a NULL
+    vector by every IVF/k-means entry point, corpus and query side: the
+    results equal those over the clean corpus. Kept, a NaN component
+    would fold every decimal dot to NULL and file the vector under list
+    0."""
+    nan, inf = float("nan"), float("inf")
+    good = [(i, [float(i), 1.0, float(i % 3)]) for i in range(1, 13)]
+    bad = [
+        (90, [nan, 0.0, 1.0]),
+        (91, [inf, 0.0, 1.0]),
+        (92, [1.0, -inf, 0.0]),
+        (93, [1.0, None, 0.0]),
+        (94, None),
+    ]
+    schema = "vec_id int, embedding array<double>"
+    vecs = spark.createDataFrame(good + bad, schema)
+    clean = spark.createDataFrame(good, schema)
+    q = spark.createDataFrame(
+        [(0, [1.0, 0.5, 0.0]), (1, [nan, 1.0, 0.0])],
+        "query_id int, embedding array<double>",
+    )
+    kw = {"k": 5, "n_centroids": 3, "n_probe": 2}
+    got = sorted(map(tuple, similarity.ivf_topk(vecs, q, **kw).collect()))
+    assert got == sorted(map(tuple, similarity.ivf_topk(clean, q, **kw).collect()))
+    assert {r[0] for r in got} == {0}  # the NaN query is dropped too
+    assert len(got) == 5
+
+    idx = str(tmp_path / "ivf")
+    similarity.build_ivf_index(vecs, idx, n_centroids=3)
+    indexed = {r.vec_id for r in spark.read.parquet(f"{idx}/corpus").collect()}
+    assert indexed == set(range(1, 13))
+    probed = similarity.ivf_index_topk(spark, idx, q, k=5, n_probe=2).collect()
+    assert sorted(map(tuple, probed)) == got
+
+    labels = similarity.kmeans_clusters(vecs, n_centroids=3).collect()
+    assert sorted(map(tuple, labels)) == sorted(
+        map(tuple, similarity.kmeans_clusters(clean, n_centroids=3).collect())
+    )
+
+
+def test_ivf_kmeans_dotted_column_names(spark, sf_dir, tmp_path):
+    """id_col/vec_col are literal top-level column names — a dot is part
+    of the name, not struct access — through ivf_topk,
+    build_ivf_index+ivf_index_topk and kmeans_clusters, with the same
+    results as under plain names."""
+    emb = load_table(spark, "embeddings", sf_dir).filter(F.col("vec_id") < 200)
+    dotted = emb.select(
+        F.col("vec_id").alias("id.x"), F.col("embedding").alias("emb.v")
+    )
+    q = emb.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    qd = q.withColumnRenamed("embedding", "emb.v")
+    names = {"id_col": "id.x", "vec_col": "emb.v"}
+    kw = {"k": 5, "n_probe": 2}
+    want = sorted(
+        map(tuple, similarity.ivf_topk(emb, q, n_centroids=4, **kw).collect())
+    )
+    got = similarity.ivf_topk(dotted, qd, n_centroids=4, **kw, **names)
+    assert sorted(map(tuple, got.collect())) == want
+
+    idx = str(tmp_path / "ivf")
+    similarity.build_ivf_index(dotted, idx, n_centroids=4, **names)
+    probed = similarity.ivf_index_topk(spark, idx, qd, **kw, **names)
+    assert sorted(map(tuple, probed.collect())) == want
+
+    labels = similarity.kmeans_clusters(dotted, n_centroids=4, **names)
+    assert labels.columns == ["id.x", "list_id", "cos_to_centroid"]
+    assert sorted(map(tuple, labels.collect())) == sorted(
+        map(tuple, similarity.kmeans_clusters(emb, n_centroids=4).collect())
+    )
 
 
 def test_ngram_jaccard_prefix_filter_parity(spark, sf_dir):

@@ -94,11 +94,11 @@ def test_normalize_centroid_matrix_matches_distributed_decimal(spark):
             assert v == ref[(li, pos)], (li, pos)  # bit-exact, no tolerance
 
 
-def test_centroid_literal_array_roundtrips_exact_doubles(spark):
+def test_double_array_sql_roundtrips_exact_doubles(spark):
     vals = [0.1 + 0.2, 1e-300, -1.7976931348623157e308, 3.141592653589793]
     row = (
         spark.sql("SELECT 1 AS z")
-        .select(similarity._centroid_literal_array(vals).alias("a"))
+        .select(F.expr(similarity._double_array_sql(vals)).alias("a"))
         .collect()[0]
     )
     assert list(row["a"]) == vals  # repr round-trip is exact
@@ -123,7 +123,7 @@ def test_ivf_nullsafe_join_matches_equijoin_with_null_vectors(spark):
     )
     out = similarity.ivf_topk(
         emb, queries, k=5, n_centroids=4, n_probe=2,
-        query_id_col="query_id", portable=True,
+        query_id_col="query_id",
     ).collect()
     ids = {r["neighbor_id"] for r in out}
     assert 99 not in ids  # the null-vector row can never be a candidate
@@ -134,19 +134,3 @@ def test_ivf_nullsafe_join_matches_equijoin_with_null_vectors(spark):
         per_q.setdefault(r["query_id"], []).append(r["rank"])
     for q, ranks in per_q.items():
         assert sorted(ranks) == list(range(1, len(ranks) + 1)), q
-
-
-def test_kmeans_portable_release_cache_contract(spark):
-    import random
-
-    random.seed(3)
-    emb = spark.createDataFrame(
-        [(i, [random.uniform(-1, 1) for _ in range(6)]) for i in range(30)],
-        "vec_id long, embedding array<float>",
-    )
-    out = similarity.kmeans_clusters_portable(emb, n_centroids=3, refine_iters=1)
-    assert hasattr(out, "release_cache")
-    rows = out.collect()
-    out.release_cache()  # must be callable post-action (no-op now)
-    assert len(rows) == 30
-    assert {r["list_id"] for r in rows} <= {0, 1, 2}
