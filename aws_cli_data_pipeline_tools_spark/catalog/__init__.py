@@ -58,8 +58,10 @@ def register_sql(
     delegated at aws-athena.sh:27 → here ``spark.sql`` over temp views).
 
     ``sql`` is used for both engines when the dialects agree; otherwise pass
-    ``spark_sql`` + ``duck_sql``. Views for all fixture tables are registered
-    before execution (the engine-side analog of Athena's Glue catalog).
+    ``spark_sql`` + ``duck_sql``. Each call registers fresh views for the
+    fixture tables the statement names (see :func:`statement_tables`) and
+    no others, so it reads only those tables' parquet schemas; the views
+    are the engine-side analog of Athena's Glue catalog.
     """
     s_sql = spark_sql or sql
     d_sql = duck_sql or sql
@@ -74,12 +76,41 @@ def register_sql(
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         from ..sources import register_views
 
-        register_views(spark, sf_dir)
+        register_views(spark, sf_dir, statement_tables(spark, s_sql))
         return spark.sql(s_sql)
 
     fn.__name__ = name
     fn.__doc__ = notes or f"SQL pass-through query {name}"
+    fn.spark_sql = s_sql  # the statement as Spark runs it
     REGISTRY[name] = QuerySpec(name, fn, d_sql, tags, notes)
+
+
+def statement_tables(spark: SparkSession, sql: str) -> list[str]:
+    """The fixture tables (``sources.TABLES`` order) that ``sql`` names.
+
+    Parses with Spark's own parser, with no analysis and no job, and walks
+    the unresolved plan through ``children()`` and ``innerChildren()``: the
+    latter reaches CTE bodies and scalar/``IN``/``EXISTS``/lateral
+    subqueries. Every ``UnresolvedRelation`` contributes the last part of
+    its identifier, lower-cased, so ``spark_catalog.default.part`` and a
+    backticked ``PART`` both name ``part``. A CTE that shadows a fixture
+    name still counts; registering that view is harmless. Cost: one
+    ``parsePlan`` (about 1 ms warm) plus a few py4j calls per plan node.
+    """
+    from ..sources import TABLES
+
+    plan = spark._jsparkSession.sessionState().sqlParser().parsePlan(sql)
+    named: set[str] = set()
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "UnresolvedRelation":
+            named.add(node.multipartIdentifier().last().lower())
+        for seq in (node.children(), node.innerChildren()):
+            it = seq.iterator()
+            while it.hasNext():
+                stack.append(it.next())
+    return [t for t in TABLES if t in named]
 
 
 def all_specs() -> dict[str, QuerySpec]:

@@ -9,7 +9,7 @@ tables and diffs them: for every *numeric* column (type regex at
 The reference composes N_cols×8 *scalar subqueries* chained by UNION ALL — one
 full table scan per statistic unless the remote optimizer commons them up.
 Here the plan is re-architected Spark-first: three specialized single-row
-``df.agg()`` jobs — plain codegen stats, COUNT DISTINCT, median — crossJoined
+aggregate jobs — plain codegen stats, COUNT DISTINCT, median — crossJoined
 (see ``_agg_row`` for why mixing them in one agg is a ~10× trap), then a
 driver-cheap ``stack`` projection into the wide (agg_type × columns) shape —
 no pivot shuffle at all. At 100 TB this is three column-pruned scans, each
@@ -40,7 +40,7 @@ from __future__ import annotations
 
 from typing import Literal
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -70,12 +70,32 @@ def numeric_columns(df: DataFrame) -> list[str]:
     return [f.name for f in df.schema.fields if isinstance(f.dataType, T.NumericType)]
 
 
-def _qcol(name: str) -> Column:
-    """Column reference by LITERAL name: F.col parses dots as struct access,
-    so a legal column named 'a.b' resolved via f-string interpolation raised
-    UNRESOLVED_COLUMN across the profiler family (r8 review). Backtick-quote
-    (with `` escaping) so the name is taken verbatim."""
-    return F.col("`" + name.replace("`", "``") + "`")
+# Every projection below is SQL text handed to ``selectExpr``: one py4j
+# call and one parse per frame, where PySpark ``Column`` calls take one
+# py4j round trip each (about 4,000 for a profile of lineitem, 0.33 s of
+# its 0.38 s build). Doubles are written ``1.0D``: a bare ``1.0`` is a
+# DECIMAL literal in Spark SQL.
+
+
+def _q(name: str) -> str:
+    """A column name as a SQL identifier, taken verbatim: backtick-quoted
+    with `` escaping, so a dotted name like ``a.b`` is never struct
+    access."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _str(value: str) -> str:
+    """A SQL string literal. Spark reads ``''`` inside a literal as two
+    adjacent literals, so quotes and backslashes are backslash-escaped
+    (the default ``spark.sql.parser.escapedStringLiterals=false``)."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _stack(n: int, args: list[str], names: list[str]) -> str:
+    """``stack(n, args...)`` aliased to ``names``."""
+    return (
+        f"stack({n}, {', '.join(args)}) AS ({', '.join(_q(c) for c in names)})"
+    )
 
 
 def _stat_exprs(
@@ -83,7 +103,7 @@ def _stat_exprs(
     median_mode: MedianMode,
     oracle_safe: bool = False,
     integral: bool = False,
-) -> list[Column]:
+) -> list[str]:
     """The 8 aggregate expressions for one column, in AGG_LABELS order.
 
     Everything is cast to double so the wide profile has a uniform column
@@ -97,11 +117,11 @@ def _stat_exprs(
     100-TB fact table; r8 review). decimal(38,0) is exact like the native
     sum (so DuckDB twins agree unchanged) with 10^38 of headroom.
     """
-    c = _qcol(col)
+    c = _q(col)
     median = (
-        F.percentile_approx(c, F.lit(0.5))
+        f"percentile_approx({c}, 0.5D, 10000)"
         if median_mode == "approx"
-        else F.median(c)
+        else f"median({c})"
     )
     if oracle_safe:
         # Order-independent moments: exact decimal sums, then explicit double
@@ -112,30 +132,35 @@ def _stat_exprs(
         # have ≤4 decimals) and extends headroom to |v| ≈ 1e17 per value;
         # oracles.py mirrors the same scale so both engines still round the
         # same doubles identically.
-        n = F.count(c).cast("double")
-        s1 = F.sum(c.cast("decimal(38,10)")).cast("double")
-        s2 = F.sum((c.cast("double") * c.cast("double")).cast("decimal(38,4)")).cast("double")
-        mean = s1 / n
-        var = (s2 - s1 * s1 / n) / F.nullif(n - F.lit(1.0), F.lit(0.0))
-        std = F.sqrt(var)
+        n = f"CAST(count({c}) AS DOUBLE)"
+        s1 = f"CAST(sum(CAST({c} AS DECIMAL(38,10))) AS DOUBLE)"
+        s2 = (
+            f"CAST(sum(CAST((CAST({c} AS DOUBLE) * CAST({c} AS DOUBLE)) "
+            "AS DECIMAL(38,4))) AS DOUBLE)"
+        )
+        mean = f"({s1} / {n})"
+        var = f"(({s2} - (({s1} * {s1}) / {n})) / nullif(({n} - 1.0D), 0.0D))"
+        std = f"sqrt({var})"
         sum_ = s1
     else:
-        mean = F.avg(c).cast("double")
-        std = F.stddev(c).cast("double")  # sample stddev in both engines
+        mean = f"CAST(avg({c}) AS DOUBLE)"
+        std = f"CAST(stddev({c}) AS DOUBLE)"  # sample stddev in both engines
         sum_ = (
-            F.sum(c.cast("decimal(38,0)")) if integral else F.sum(c)
-        ).cast("double")
+            f"CAST(sum(CAST({c} AS DECIMAL(38,0))) AS DOUBLE)"
+            if integral
+            else f"CAST(sum({c}) AS DOUBLE)"
+        )
     exprs = [
-        F.count(c).cast("double"),
-        F.count_distinct(c).cast("double"),
-        F.round(mean, 5),
-        F.round(std, 5),
-        F.round(F.min(c).cast("double"), 5),
-        F.round(median.cast("double"), 5),
-        F.round(F.max(c).cast("double"), 5),
-        F.round(sum_, 5),
+        f"CAST(count({c}) AS DOUBLE)",
+        f"CAST(count(DISTINCT {c}) AS DOUBLE)",
+        f"round({mean}, 5)",
+        f"round({std}, 5)",
+        f"round(CAST(min({c}) AS DOUBLE), 5)",
+        f"round(CAST({median} AS DOUBLE), 5)",
+        f"round(CAST(max({c}) AS DOUBLE), 5)",
+        f"round({sum_}, 5)",
     ]
-    return [e.alias(f"{col}__{i}") for i, e in enumerate(exprs)]
+    return [f"{e} AS {_q(f'{col}__{i}')}" for i, e in enumerate(exprs)]
 
 
 def _narrow_scan(df: DataFrame) -> bool:
@@ -148,12 +173,16 @@ def _narrow_scan(df: DataFrame) -> bool:
     est = plan_size_bytes(df)
     if est is None:
         return False
-    spark = df.sparkSession
-    try:
-        mpb = int(spark.conf.get("spark.sql.files.maxPartitionBytes").rstrip("b"))
-    except (TypeError, ValueError, AttributeError):
-        mpb = 128 * 1024 * 1024
-    return est < mpb * spark.sparkContext.defaultParallelism
+    return est < _narrow_scan_threshold(df.sparkSession)
+
+
+def _narrow_scan_threshold(spark) -> int:
+    """``maxPartitionBytes × defaultParallelism`` in bytes, with the conf
+    resolved by Spark itself (so a human-typed ``64m`` counts as 64 MiB
+    instead of failing a parse)."""
+    from .sources import max_partition_bytes
+
+    return max_partition_bytes(spark) * spark.sparkContext.defaultParallelism
 
 
 def _agg_row(
@@ -215,23 +244,24 @@ def _agg_row(
     # than the single-task scan saves) and neutral on the approx
     # profile; the distinct scan's Expand partial-dedup and the median
     # sort buffers also prefer the single-partition bench scan.
-    median = df.agg(*[all_exprs[c][5] for c in cols])
+    median = df.selectExpr(*[all_exprs[c][5] for c in cols])
     if distinct_mode == "approx":
         hll = [
-            F.approx_count_distinct(_qcol(c), rsd=0.02)
-            .cast("double")
-            .alias(f"{c}__1")
+            f"CAST(approx_count_distinct({_q(c)}, 0.02D) AS DOUBLE) "
+            f"AS {_q(f'{c}__1')}"
             for c in cols
         ]
         if _narrow_scan(df):
             # concurrency split — see the docstring above
             return (
-                df.agg(*basic_cols).crossJoin(df.agg(*hll)).crossJoin(median)
+                df.selectExpr(*basic_cols)
+                .crossJoin(df.selectExpr(*hll))
+                .crossJoin(median)
             )
-        basic = df.agg(*basic_cols, *hll)
+        basic = df.selectExpr(*basic_cols, *hll)
         return basic.crossJoin(median)
-    basic = df.agg(*basic_cols)
-    distinct = df.agg(*[all_exprs[c][1] for c in cols])
+    basic = df.selectExpr(*basic_cols)
+    distinct = df.selectExpr(*[all_exprs[c][1] for c in cols])
     return basic.crossJoin(distinct).crossJoin(median)
 
 
@@ -275,14 +305,20 @@ def profile(
     agg_row = _agg_row(df, cols, median_mode, oracle_safe, distinct_mode)
 
     # stack(8, label_i, <col1>__i, ..., <colN>__i, ...) → 8 rows × (1+N) cols.
-    stack_args: list[Column] = []
-    for i, label in enumerate(AGG_LABELS):
-        stack_args.append(F.lit(label))
-        stack_args.extend(_qcol(f"{c}__{i}") for c in cols)
-    stacked = agg_row.select(
-        F.stack(F.lit(len(AGG_LABELS)), *stack_args).alias("agg_type", *cols)
-    )
-    return stacked.orderBy("agg_type")
+    return _stack_wide(agg_row, AGG_LABELS, cols)
+
+
+def _stack_wide(row: DataFrame, labels: list[str], cols: list[str]) -> DataFrame:
+    """Melt a one-row ``<col>__<i>`` frame into one row per label, one
+    column per input column, sorted by label."""
+    args = [
+        a
+        for i, label in enumerate(labels)
+        for a in [_str(label), *(_q(f"{c}__{i}") for c in cols)]
+    ]
+    return row.selectExpr(
+        _stack(len(labels), args, ["agg_type", *cols])
+    ).orderBy("agg_type")
 
 
 def profile_long(df: DataFrame, median_mode: MedianMode = "approx", oracle_safe: bool = False) -> DataFrame:
@@ -303,15 +339,16 @@ def profile_long(df: DataFrame, median_mode: MedianMode = "approx", oracle_safe:
         return df.sparkSession.createDataFrame([], schema)
 
     agg_row = _agg_row(df, cols, median_mode, oracle_safe)
-    stack_args: list[Column] = []
-    for c in cols:
-        for i, label in enumerate(AGG_LABELS):
-            stack_args.extend([F.lit(c), F.lit(label), _qcol(f"{c}__{i}")])
-        # rows are (column_name, agg_type, result)
-    stacked = agg_row.select(
-        F.stack(F.lit(len(cols) * len(AGG_LABELS)), *stack_args).alias(
-            "column_name", "agg_type", "result"
-        )
+    # rows are (column_name, agg_type, result)
+    args = [
+        a
+        for c in cols
+        for i, label in enumerate(AGG_LABELS)
+        for a in (_str(c), _str(label), _q(f"{c}__{i}"))
+    ]
+    stacked = agg_row.selectExpr(
+        _stack(len(cols) * len(AGG_LABELS), args,
+               ["column_name", "agg_type", "result"])
     )
     return stacked.orderBy("column_name", "agg_type")
 
@@ -340,19 +377,16 @@ def profile_diff(
 
     b = p_base.alias("b")
     t = p_target.alias("t")
-    joined = b.join(t, on=F.col("b.agg_type") == F.col("t.agg_type"), how="full_outer")
+    joined = b.join(t, on=F.expr("b.agg_type = t.agg_type"), how="full_outer")
 
-    out: list[Column] = [
-        F.coalesce(F.col("b.agg_type"), F.col("t.agg_type")).alias("agg_type")
-    ]
+    out = ["coalesce(b.agg_type, t.agg_type) AS agg_type"]
     for c in all_cols:
-        qc = "`" + c.replace("`", "``") + "`"  # literal name (dots legal)
-        bcol = F.col(f"b.{qc}") if c in base_cols else F.lit(None).cast("double")
-        tcol = F.col(f"t.{qc}") if c in target_cols else F.lit(None).cast("double")
-        out.append(bcol.alias(f"{c}_base"))
-        out.append(tcol.alias(f"{c}_target"))
-        out.append(bcol.eqNullSafe(tcol).alias(f"{c}_equal"))
-    return joined.select(*out).orderBy("agg_type")
+        bcol = f"b.{_q(c)}" if c in base_cols else "CAST(NULL AS DOUBLE)"
+        tcol = f"t.{_q(c)}" if c in target_cols else "CAST(NULL AS DOUBLE)"
+        out.append(f"{bcol} AS {_q(c + '_base')}")
+        out.append(f"{tcol} AS {_q(c + '_target')}")
+        out.append(f"({bcol} <=> {tcol}) AS {_q(c + '_equal')}")
+    return joined.selectExpr(*out).orderBy("agg_type")
 
 
 #: String-profile statistic labels — same numbered-label convention as
@@ -393,30 +427,31 @@ def profile_strings(df: DataFrame) -> DataFrame:
     if not cols:
         return _empty_profile(df, cols)
 
-    def basic_exprs(c: str) -> list[Column]:
-        q = _qcol(c)
-        ln = F.length(q)
+    def basic_exprs(c: str) -> list[str]:
+        q = _q(c)
+        ln = f"length({q})"
         return [
-            F.count(q).cast("double").alias(f"{c}__0"),
-            F.round(F.avg(ln.cast("decimal(38,10)")).cast("double"), 5).alias(f"{c}__2"),
-            F.min(ln).cast("double").alias(f"{c}__3"),
-            F.max(ln).cast("double").alias(f"{c}__4"),
-            F.count(F.when(q == "", 1)).cast("double").alias(f"{c}__5"),
+            f"CAST(count({q}) AS DOUBLE) AS {_q(c + '__0')}",
+            f"round(CAST(avg(CAST({ln} AS DECIMAL(38,10))) AS DOUBLE), 5) "
+            f"AS {_q(c + '__2')}",
+            f"CAST(min({ln}) AS DOUBLE) AS {_q(c + '__3')}",
+            f"CAST(max({ln}) AS DOUBLE) AS {_q(c + '__4')}",
+            f"CAST(count(CASE WHEN ({q} = '') THEN 1 END) AS DOUBLE) "
+            f"AS {_q(c + '__5')}",
         ]
 
-    basic = df.agg(*[e for c in cols for e in basic_exprs(c)])
-    distinct = df.agg(
-        *[F.count_distinct(_qcol(c)).cast("double").alias(f"{c}__1") for c in cols]
+    basic = df.selectExpr(*[e for c in cols for e in basic_exprs(c)])
+    return _stack_wide(
+        basic.crossJoin(_distinct_row(df, cols)), STRING_AGG_LABELS, cols
     )
-    row = basic.crossJoin(distinct)
 
-    stack_args: list[Column] = []
-    for i, label in enumerate(STRING_AGG_LABELS):
-        stack_args.append(F.lit(label))
-        stack_args.extend(_qcol(f"{c}__{i}") for c in cols)
-    return row.select(
-        F.stack(F.lit(len(STRING_AGG_LABELS)), *stack_args).alias("agg_type", *cols)
-    ).orderBy("agg_type")
+
+def _distinct_row(df: DataFrame, cols: list[str]) -> DataFrame:
+    """One row of exact distinct counts, ``<col>__1`` per column."""
+    return df.selectExpr(
+        *[f"CAST(count(DISTINCT {_q(c)}) AS DOUBLE) AS {_q(c + '__1')}"
+          for c in cols]
+    )
 
 
 #: Temporal-profile labels (same numbered convention; §1.2 extension).
@@ -454,32 +489,17 @@ def profile_temporal(df: DataFrame) -> DataFrame:
     if not cols:
         return _empty_profile(df, cols)
 
-    def epoch(c: str) -> Column:
-        return F.unix_timestamp(_qcol(c).cast("timestamp")).cast("double")
-
-    basic = df.agg(
-        *[
-            e
-            for c in cols
-            for e in (
-                F.count(_qcol(c)).cast("double").alias(f"{c}__0"),
-                F.min(epoch(c)).alias(f"{c}__2"),
-                F.max(epoch(c)).alias(f"{c}__3"),
-                F.round(
-                    (F.max(epoch(c)) - F.min(epoch(c))) / F.lit(86400.0), 5
-                ).alias(f"{c}__4"),
-            )
+    def basic_exprs(c: str) -> list[str]:
+        epoch = f"CAST(unix_timestamp(CAST({_q(c)} AS TIMESTAMP)) AS DOUBLE)"
+        return [
+            f"CAST(count({_q(c)}) AS DOUBLE) AS {_q(c + '__0')}",
+            f"min({epoch}) AS {_q(c + '__2')}",
+            f"max({epoch}) AS {_q(c + '__3')}",
+            f"round(((max({epoch}) - min({epoch})) / 86400.0D), 5) "
+            f"AS {_q(c + '__4')}",
         ]
-    )
-    distinct = df.agg(
-        *[F.count_distinct(_qcol(c)).cast("double").alias(f"{c}__1") for c in cols]
-    )
-    row = basic.crossJoin(distinct)
 
-    stack_args: list[Column] = []
-    for i, label in enumerate(TEMPORAL_AGG_LABELS):
-        stack_args.append(F.lit(label))
-        stack_args.extend(_qcol(f"{c}__{i}") for c in cols)
-    return row.select(
-        F.stack(F.lit(len(TEMPORAL_AGG_LABELS)), *stack_args).alias("agg_type", *cols)
-    ).orderBy("agg_type")
+    basic = df.selectExpr(*[e for c in cols for e in basic_exprs(c)])
+    return _stack_wide(
+        basic.crossJoin(_distinct_row(df, cols)), TEMPORAL_AGG_LABELS, cols
+    )

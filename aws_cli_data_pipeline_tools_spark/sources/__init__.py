@@ -96,9 +96,10 @@ def scratch_dir(prefix: str) -> str:
 _FANOUT_ENV = "SPARK_GRAFT_SCAN_FANOUT"
 _FANOUT_ENV_LEGACY = "SPARKGRAFT_SCAN_FANOUT"
 
-#: Memo of static partition counts keyed by (SparkContext identity,
-#: analyzed-plan semanticHash) — see ``scan_parallelism``.
-_WIDTH_CACHE: dict[tuple[int, int], int] = {}
+#: Memo of static partition counts keyed by (application id, context
+#: start time, the two confs that size partitions, analyzed-plan
+#: semanticHash) — see ``scan_parallelism``.
+_WIDTH_CACHE: dict[tuple, int] = {}
 _WIDTH_CACHE_MAX = 4096
 
 
@@ -146,10 +147,23 @@ def scan_parallelism(df: DataFrame) -> int:
     at runtime, so width decisions are only meaningful for scan-level
     frames (the only places the operators call this). A hash collision
     can at worst mis-size a repartition width — never affects results.
+
+    The key names the SparkContext by application id and start time (an
+    ``id()`` can be reused by a new context after the old one is
+    collected) and carries the resolved ``maxPartitionBytes`` and
+    ``shuffle.partitions``, so changing either mid-session re-probes.
     """
-    sc_key = id(df.sparkSession.sparkContext)
+    spark = df.sparkSession
+    sc = spark.sparkContext
     try:
-        key = (sc_key, df.semanticHash())
+        conf = spark._jsparkSession.sessionState().conf()
+        key = (
+            sc.applicationId,
+            sc.startTime,
+            conf.filesMaxPartitionBytes(),
+            conf.numShufflePartitions(),
+            df.semanticHash(),
+        )
     except Exception:
         key = None
     if key is not None and key in _WIDTH_CACHE:
@@ -160,6 +174,13 @@ def scan_parallelism(df: DataFrame) -> int:
             _WIDTH_CACHE.clear()
         _WIDTH_CACHE[key] = n
     return n
+
+
+def max_partition_bytes(spark: SparkSession) -> int:
+    """``spark.sql.files.maxPartitionBytes`` as Spark resolves it, in
+    bytes: a human-typed ``64m`` reads 67108864, as the file scan sees
+    it."""
+    return spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
 
 
 def plan_size_bytes(df: DataFrame) -> int | None:
@@ -259,9 +280,11 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
 
 
 def register_views(spark: SparkSession, sf_dir: str | None = None, tables: list[str] | None = None) -> None:
-    """Register every fixture table as a temp view so ``spark.sql`` queries
-    name them directly (the engine-side analog of Athena's Glue catalog)."""
-    for name in tables or TABLES:
+    """Register fixture tables as temp views so ``spark.sql`` queries name
+    them directly (the engine-side analog of Athena's Glue catalog):
+    every table when ``tables`` is None, exactly ``tables`` otherwise, so
+    an empty list registers nothing."""
+    for name in TABLES if tables is None else tables:
         load_table(spark, name, sf_dir).createOrReplaceTempView(name)
 
 

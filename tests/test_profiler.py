@@ -297,16 +297,69 @@ def test_profile_oracle_safe_large_magnitude_squares(spark):
     assert abs(got["4. std"] - 7.0710678118654752e14) / 1e15 < 1e-6
 
 
-def test_profile_handles_dotted_column_names(spark):
+def test_profile_handles_dotted_column_names(spark, monkeypatch):
     """r8 review: F.col parses dots as struct access, so a legal column
-    named 'a.b' raised UNRESOLVED_COLUMN across the profiler family."""
-    df = spark.createDataFrame([(1.0,), (3.0,)], ["a.b"])
-    got = {r.agg_type: r["a.b"] for r in profiler.profile(df).collect()}
-    assert got["1. count"] == 2.0 and got["8. sum"] == 4.0
+    named 'a.b' raised UNRESOLVED_COLUMN across the profiler family. The
+    profiler builds its projections as SQL text, so every path must also
+    quote a backtick (identifier), and a single quote and a backslash
+    (profile_long writes column names as string literals)."""
+    import datetime as dt
+
+    names = ["a.b", "x`y", "o'k", "b\\s"]
+    df = spark.createDataFrame(
+        [(1.0, 2.0, 5.0, 9.0), (3.0, 4.0, 7.0, 11.0)], names
+    )
+    for kw in ({}, {"median_mode": "exact", "oracle_safe": True}):
+        got = {r.agg_type: r for r in profiler.profile(df, **kw).collect()}
+        for c, total in zip(names, (4.0, 6.0, 12.0, 20.0)):
+            assert got["1. count"][c] == 2.0 and got["8. sum"][c] == total
+            assert got["2. count_distinct"][c] == 2.0
+    for narrow in (True, False):  # both sides of the narrow-scan gate
+        monkeypatch.setattr(profiler, "_narrow_scan", lambda d, n=narrow: n)
+        got = {
+            r.agg_type: r
+            for r in profiler.profile(df, distinct_mode="approx").collect()
+        }
+        assert [got["2. count_distinct"][c] for c in names] == [2.0] * 4
+        assert got["3. mean"]["o'k"] == 6.0
+    monkeypatch.undo()
     diff = profiler.profile_diff(df, df).collect()
-    assert all(r["a.b_equal"] for r in diff)
+    assert all(r[f"{c}_equal"] for r in diff for c in names)
+    assert diff[7]["x`y_base"] == 6.0 and diff[7]["o'k_target"] == 12.0
     long = profiler.profile_long(df).collect()
-    assert {r.column_name for r in long} == {"a.b"}
+    assert {r.column_name for r in long} == set(names)
+    sums = {r.column_name: r.result for r in long if r.agg_type == "8. sum"}
+    assert sums == {"a.b": 4.0, "x`y": 6.0, "o'k": 12.0, "b\\s": 20.0}
+    strs = spark.createDataFrame([("ab", "", "xyz", "q")], names)
+    srows = {r.agg_type: r for r in profiler.profile_strings(strs).collect()}
+    assert [srows["5. max_len"][c] for c in names] == [2.0, 0.0, 3.0, 1.0]
+    assert srows["6. empty"]["x`y"] == 1.0
+    dates = spark.createDataFrame(
+        [(dt.date(2024, 1, 1),) * 4, (dt.date(2024, 1, 4),) * 4], names
+    )
+    trows = {r.agg_type: r for r in profiler.profile_temporal(dates).collect()}
+    assert [trows["5. span_days"][c] for c in names] == [3.0] * 4
+
+
+def test_narrow_scan_threshold_reads_human_typed_conf(spark, monkeypatch):
+    """A human-typed ``64m`` maxPartitionBytes is 64 MiB to the gate, as
+    to the file scan; the old ``int(conf.rstrip("b"))`` parse raised on
+    it and silently fell back to 128 MiB."""
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    par = spark.sparkContext.defaultParallelism
+    try:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "64m")
+        want = 64 * 1024 * 1024 * par
+        assert profiler._narrow_scan_threshold(spark) == want
+        df = spark.range(1)
+        from aws_cli_data_pipeline_tools_spark import sources
+
+        monkeypatch.setattr(sources, "plan_size_bytes", lambda d: want - 1)
+        assert profiler._narrow_scan(df)
+        monkeypatch.setattr(sources, "plan_size_bytes", lambda d: want)
+        assert not profiler._narrow_scan(df)
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
 
 
 def test_profile_rejects_agg_type_column(spark):

@@ -581,3 +581,37 @@ def test_write_zordered_rejects_reserved_column(spark, tmp_path):
     )
     with _pytest.raises(ValueError, match="__z"):
         write_zordered(df, str(tmp_path / "z"), "a", "b")
+
+
+def test_scan_parallelism_reprobes_when_sizing_confs_change(spark, tmp_path):
+    """The width memo is keyed by the confs that size partitions: a frame
+    rebuilt after ``maxPartitionBytes``/``shuffle.partitions`` changes
+    (same plan, same semanticHash) is re-probed, not served the width
+    memoized under the old value."""
+    from aws_cli_data_pipeline_tools_spark.sources import (
+        _WIDTH_CACHE,
+        scan_parallelism,
+    )
+
+    path = str(tmp_path / "csv")
+    spark.range(20000).selectExpr("id", "repeat('x', 8) AS pad") \
+        .coalesce(1).write.csv(path)
+    mpb = "spark.sql.files.maxPartitionBytes"
+    shp = "spark.sql.shuffle.partitions"
+    old = {k: spark.conf.get(k) for k in (mpb, shp)}
+    try:
+        def csv():
+            return spark.read.schema("id bigint, pad string").csv(path)
+
+        spark.conf.set(mpb, "32k")
+        assert scan_parallelism(csv()) > 1
+        spark.conf.set(mpb, "1m")
+        assert scan_parallelism(csv()) == 1
+        for n in ("7", "5"):  # no scan width depends on it: count probes
+            spark.conf.set(shp, n)
+            before = set(_WIDTH_CACHE)
+            assert scan_parallelism(csv()) == 1
+            assert len(set(_WIDTH_CACHE) - before) == 1
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
